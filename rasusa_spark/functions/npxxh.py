@@ -24,6 +24,11 @@ Strings of ≥ 32 bytes take the scalar reference path (``xxh64_bytes_py``,
 full spec incl. the 32-byte stripes) — rare for whitespace words, exact
 for any length. All functions expect ``np.seterr(over="ignore")`` scope
 (uint64 wraparound is the algorithm).
+
+Byte order: XXH64 reads its input words little-endian, and Arrow buffers
+are little-endian by spec, so every reinterpretation of raw bytes here
+names its dtype explicitly (``'<u8'``, ``'<i4'``, ``'<i8'``) — the
+hashes are the same on a big-endian host.
 """
 
 from __future__ import annotations
@@ -107,6 +112,18 @@ def xxh64_bytes_py(data: bytes, seed: int) -> int:
     return int(fmix(h))
 
 
+def le_words(b: np.ndarray) -> np.ndarray:
+    """A uint8 array (length a multiple of 8) as little-endian uint64 words
+    — XXH64's read order on any host."""
+    return b.view("<u8")
+
+
+def arrow_offsets(buf, large: bool) -> np.ndarray:
+    """An Arrow offsets buffer (little-endian int32, or int64 for the
+    large types) as an array, on any host."""
+    return np.frombuffer(buf, dtype="<i8" if large else "<i4")
+
+
 def xxh64_strings_vec(
     flat: np.ndarray,
     offs: np.ndarray,
@@ -132,7 +149,7 @@ def xxh64_strings_vec(
         np.clip(gather, 0, flat.size - 1, out=gather)
         pad = flat[gather]
         pad[np.arange(32)[None, :] >= s_len[:, None]] = 0
-        words = pad.view(np.uint64).reshape(short.size, 4)
+        words = le_words(pad).reshape(short.size, 4)
         h = seeds[short] + P5 + s_len.astype(np.uint64)
         for w in range(3):  # up to 3 full 8-byte words for len < 32
             mask = s_len >= 8 * (w + 1)
@@ -181,12 +198,9 @@ def window_gram_hashes(words_col, n: int):
         col = col.combine_chunks()
     doc_offs = col.offsets.to_numpy().astype(np.int64)
     vals = col.values  # StringArray of all words
-    off_dtype = (
-        np.int64 if pa.types.is_large_string(vals.type) else np.int32
-    )
-    woffs = np.frombuffer(vals.buffers()[1], dtype=off_dtype)[
-        vals.offset : vals.offset + len(vals) + 1
-    ].astype(np.int64)
+    woffs = arrow_offsets(
+        vals.buffers()[1], pa.types.is_large_string(vals.type)
+    )[vals.offset : vals.offset + len(vals) + 1].astype(np.int64)
     data_buf = vals.buffers()[2]
     flat = (
         np.frombuffer(data_buf, dtype=np.uint8)

@@ -282,6 +282,24 @@ def _prefix_candidates_from_docs(
     return paired.where(ubound >= alpha).select("id_a", "id_b")
 
 
+def _list_offsets(offs, what: str):
+    """int32 Arrow list offsets (Spark's ``array`` type) from int64
+    offsets. A batch whose lists hold more than 2**31 - 1 values in total
+    is refused with the count instead of wrapping silently into
+    corrupt offsets."""
+    import numpy as np
+    import pyarrow as pa
+
+    total = int(offs[-1])
+    if total > np.iinfo(np.int32).max:
+        raise ValueError(
+            f"{what}: {total} list values in one Arrow batch exceed the int32 "
+            "list offset range (2**31 - 1); lower "
+            "spark.sql.execution.arrow.maxRecordsPerBatch"
+        )
+    return pa.array(offs.astype(np.int32), pa.int32())
+
+
 def _gram_sets_kernel(
     df: DataFrame, n: int, text_col: str, id_col: str
 ) -> DataFrame:
@@ -328,7 +346,7 @@ def _gram_sets_kernel(
                 offs = np.zeros(m + 1, dtype=np.int64)
                 offs[1:] = np.cumsum(counts[:m])
                 arr = pa.ListArray.from_arrays(
-                    pa.array(offs.astype(np.int32), pa.int32()),
+                    _list_offsets(offs, "shingle sets"),
                     pa.array(fo.view(np.int64), pa.int64()),
                 )
                 yield pa.record_batch(
@@ -699,10 +717,12 @@ def minhash_signatures(
                 for i in range(np_):
                     v = hash_int(i, h1).view(np.int64)
                     sig[:, i] = np.minimum.reduceat(v, starts)
-                out_offs = (np.arange(m + 1, dtype=np.int32) * np_)
                 values = pa.array(sig.reshape(-1), pa.int64())
                 sig_arr = pa.ListArray.from_arrays(
-                    pa.array(out_offs, pa.int32()), values
+                    _list_offsets(
+                        np.arange(m + 1, dtype=np.int64) * np_, "signatures"
+                    ),
+                    values,
                 )
                 yield pa.record_batch(
                     [batch.column(id_col), sig_arr], names=[id_col, "signature"]

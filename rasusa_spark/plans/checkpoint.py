@@ -26,6 +26,7 @@ Mechanics (all Spark-idiomatic, no driver loops over buckets):
 
 from __future__ import annotations
 
+import contextlib
 import os
 from dataclasses import dataclass, field
 
@@ -65,6 +66,24 @@ class DownsampleJob:
     bucket_unit: str = "day"
     group_cols: tuple[str, ...] = ("source",)
     extra: dict = field(default_factory=dict)
+
+
+@contextlib.contextmanager
+def _dynamic_overwrite(spark: SparkSession):
+    """Scope spark.sql.sources.partitionOverwriteMode=dynamic to one write:
+    the previous value is restored on exit so unrelated later
+    mode('overwrite').partitionBy(...) writes in the same session don't
+    silently become dynamic (ADVICE r5)."""
+    key = "spark.sql.sources.partitionOverwriteMode"
+    prev = spark.conf.get(key, None)
+    spark.conf.set(key, "dynamic")
+    try:
+        yield
+    finally:
+        if prev is None:
+            spark.conf.unset(key)
+        else:
+            spark.conf.set(key, prev)
 
 
 def _bucketed(df: DataFrame, unit: str) -> DataFrame:
@@ -138,8 +157,6 @@ def run_downsample_job(
 
     # data first (idempotent via dynamic partition overwrite), commits second;
     # the partition key is the commit unit itself (see module docstring)
-    from ..streaming.incremental import _dynamic_overwrite
-
     out = kept.withColumn(
         "bucket_id", F.date_format("bucket_start", "yyyyMMdd'T'HHmmss")
     )

@@ -17,11 +17,12 @@ cell-partitioned store. This module maintains the store incrementally:
   probe cost stays proportional to the probed cells' bytes no matter how
   many increments accumulated (compaction folds small txn files, same
   posture as the retained-table compactor);
-- crash safety is the same roll-forward transaction as the dedup store:
-  staged assignment + an intent carrying the file list and schema, a
-  replayable promote into the deterministic per-txn directory, a
+- crash safety is the same roll-forward transaction as the tier and
+  dedup stores (txn.py): the assignment staged once in the store's
+  ``ivf_cell=<c>`` layout, a file-list intent, a replayable promote
+  renaming it onto the deterministic per-txn directory and unioning the
   per-store file manifest, and ``recover_pending_ivf`` to roll a
-  prepared transaction forward exactly once.
+  committed transaction forward exactly once.
 
 Exactness: assignment is a pure function of (centroids, vector), so the
 incrementally-built store holds exactly the rows ``write_ivf_partitioned``
@@ -36,24 +37,19 @@ resumable-commit posture as the reference's @PG lineage chain.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from rasusa_spark.operators.similarity import (
     cosine_topk,
     ivf_assign,
     ivf_build_centroids,
 )
-from rasusa_spark.streaming.incremental import (
-    _fs,
-    _fs_delete,
-    _read_parquet_or_none,
-)
+from rasusa_spark.streaming import txn
+from rasusa_spark.streaming.incremental import _read_parquet_or_none
 
 _STORE = "ivf_store"
 
@@ -76,7 +72,7 @@ def _list_txn_dirs(spark: SparkSession, tree: str) -> list[str]:
     """Driver-side METADATA listing of a store tree's ``txn=<id>``
     children (Hadoop FS — local/HDFS/S3A alike; O(txns), never row
     data)."""
-    fs, root = _fs(spark, tree)
+    fs, root = txn.fs_path(spark, tree)
     if not fs.exists(root):
         return []
     return sorted(
@@ -86,39 +82,21 @@ def _list_txn_dirs(spark: SparkSession, tree: str) -> list[str]:
     )
 
 
-def _txn_id(files: list[str]) -> str:
-    return hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()[:12]
-
-
 def _txn_cleanup_ivf(spark: SparkSession, state_path: str) -> None:
     p = _paths(state_path)
-    _fs_delete(spark, p["intent"])
-    _fs_delete(spark, p["staging"])
+    txn.delete(spark, p["intent"], p["staging"])
 
 
 def _txn_promote_ivf(spark: SparkSession, state_path: str) -> None:
-    """Replayable promote: staged rows overwrite the txn's own cells
-    directory (static target ⇒ idempotent), manifest update is set
-    union, intent deletion is the commit point."""
+    """Replayable promote: the staged cells move onto the txn's own
+    cells directory (delete-then-rename onto a static target ⇒
+    idempotent), manifest update is set union, intent deletion is the
+    commit point."""
     p = _paths(state_path)
-    intent_rows = spark.read.parquet(p["intent"]).collect()
-    files = sorted(r.path for r in intent_rows)
-    txn = _txn_id(files)
-    schema = T.StructType.fromDDL(intent_rows[0].staged_schema)
-
-    staged = spark.read.schema(schema).parquet(p["staging"])
-    staged.write.mode("overwrite").partitionBy("ivf_cell").parquet(
-        os.path.join(p["cells"], f"txn={txn}")
-    )
-
-    all_files = set(files)
-    manifest = _read_parquet_or_none(spark, p["manifest"])
-    if manifest is not None:
-        all_files |= {r.path for r in manifest.collect()}
-    spark.createDataFrame(
-        sorted((f,) for f in all_files), "path string"
-    ).coalesce(1).write.mode("overwrite").parquet(p["manifest"])
-
+    files = txn.intent_keys(spark, p["intent"], p["staging"])
+    target = f"txn={txn.txn_id(files)}"
+    txn.move(spark, p["staging"], os.path.join(p["cells"], target))
+    txn.union_manifest(spark, p["manifest"], files)
     _txn_cleanup_ivf(spark, state_path)
 
 
@@ -127,36 +105,33 @@ def recover_pending_ivf(spark: SparkSession, state_path: str) -> bool:
     pre-intent scratch otherwise. Same contract as the dedup/tier
     recoveries — run before reading the manifest."""
     p = _paths(state_path)
-    fs, intent_jpath = _fs(spark, p["intent"])
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    if not fs.exists(intent_jpath) or not fs.exists(
-        jvm_path(os.path.join(p["intent"], "_SUCCESS"))
-    ):
-        _txn_cleanup_ivf(spark, state_path)
-        return False
-    _txn_promote_ivf(spark, state_path)
-    return True
+    return txn.recover(
+        spark, p["intent"], _txn_promote_ivf, _txn_cleanup_ivf, state_path
+    )
 
 
 def _compact_promote_ivf(spark: SparkSession, state_path: str) -> None:
-    """Replayable compaction promote: write the consolidated txn directory
-    (static target ⇒ idempotent overwrite), THEN delete the folded txn
-    dirs (idempotent), then delete the intent (the commit point) and
-    scratch. A kill anywhere is repaired by re-running this."""
+    """Replayable compaction promote: move the consolidated cells onto
+    their txn directory (static target ⇒ idempotent), THEN delete the
+    folded txn dirs (idempotent), then delete the intent (the commit
+    point) and scratch. A kill anywhere is repaired by re-running this."""
     p = _paths(state_path)
-    intent_rows = spark.read.parquet(p["compact_intent"]).collect()
-    folded = sorted(r.txn for r in intent_rows)
-    schema = T.StructType.fromDDL(intent_rows[0].staged_schema)
-    cid = "c-" + _txn_id(folded)
-
-    staged = spark.read.schema(schema).parquet(p["compact_staging"])
-    staged.write.mode("overwrite").partitionBy("ivf_cell").parquet(
-        os.path.join(p["cells"], f"txn={cid}")
+    folded = txn.intent_keys(
+        spark, p["compact_intent"], p["compact_staging"], key="txn"
+    )
+    txn.move(
+        spark,
+        p["compact_staging"],
+        os.path.join(p["cells"], f"txn=c-{txn.txn_id(folded)}"),
     )
     for t in folded:
-        _fs_delete(spark, os.path.join(p["cells"], f"txn={t}"))
-    _fs_delete(spark, p["compact_intent"])
-    _fs_delete(spark, p["compact_staging"])
+        txn.delete(spark, os.path.join(p["cells"], f"txn={t}"))
+    _compact_cleanup_ivf(spark, state_path)
+
+
+def _compact_cleanup_ivf(spark: SparkSession, state_path: str) -> None:
+    p = _paths(state_path)
+    txn.delete(spark, p["compact_intent"], p["compact_staging"])
 
 
 def recover_pending_ivf_compaction(spark: SparkSession, state_path: str) -> bool:
@@ -165,16 +140,10 @@ def recover_pending_ivf_compaction(spark: SparkSession, state_path: str) -> bool
     store — a crash mid-promote can leave BOTH the consolidated dir and
     some folded dirs on disk (duplicate rows) until replayed."""
     p = _paths(state_path)
-    fs, intent_jpath = _fs(spark, p["compact_intent"])
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    if not fs.exists(intent_jpath) or not fs.exists(
-        jvm_path(os.path.join(p["compact_intent"], "_SUCCESS"))
-    ):
-        _fs_delete(spark, p["compact_intent"])
-        _fs_delete(spark, p["compact_staging"])
-        return False
-    _compact_promote_ivf(spark, state_path)
-    return True
+    return txn.recover(
+        spark, p["compact_intent"], _compact_promote_ivf, _compact_cleanup_ivf,
+        state_path,
+    )
 
 
 def compact_ivf_cells(spark: SparkSession, state_path: str) -> dict:
@@ -187,51 +156,39 @@ def compact_ivf_cells(spark: SparkSession, state_path: str) -> dict:
 
     Search identity: the consolidated store holds exactly the same rows
     (pinned by test — ``ivf_store_topk`` results are unchanged). Crash
-    safety: stage → intent (with _SUCCESS, the prepare commit point) →
-    replayable promote; only fully-committed ingest txns are folded
-    (``recover_pending_ivf`` runs first). The ingest manifest is
-    untouched — compaction moves rows between directories, never changes
-    which input files were ingested. Returns
-    ``{"folded_txns", "files_before", "files_after"}``."""
+    safety: stage in the store layout → intent (with _SUCCESS, the
+    prepare commit point) → replayable rename promote; only
+    fully-committed ingest txns are folded (``recover_pending_ivf`` runs
+    first). The ingest manifest is untouched — compaction moves rows
+    between directories, never changes which input files were ingested.
+    Returns ``{"folded_txns", "files_before", "files_after"}``."""
     recover_pending_ivf(spark, state_path)
     recover_pending_ivf_compaction(spark, state_path)
     p = _paths(state_path)
 
-    def _count_files(tree: str) -> int:
-        fs, root = _fs(spark, tree)
-        if not fs.exists(root):
-            return 0
-        it = fs.listFiles(root, True)
-        n = 0
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
-
     txns = _list_txn_dirs(spark, p["cells"])
+    files_before = txn.count_parquet_files(spark, p["cells"])
     if len(txns) <= 1:
         return {
             "folded_txns": 0,
-            "files_before": _count_files(p["cells"]),
-            "files_after": _count_files(p["cells"]),
+            "files_before": files_before,
+            "files_after": files_before,
         }
-    files_before = _count_files(p["cells"])
 
-    df = spark.read.option("basePath", p["cells"]).parquet(p["cells"])
     # one shuffle on the cell key → exactly one output file per cell
     # (all of a cell's rows hash to one task; partitionBy then emits one
     # file per (task, cell))
-    staged = df.drop("txn").repartition("ivf_cell")
-    staged.write.mode("overwrite").parquet(p["compact_staging"])
-    spark.createDataFrame(
-        [(t, staged.schema.toDDL()) for t in txns],
-        "txn string, staged_schema string",
-    ).coalesce(1).write.mode("overwrite").parquet(p["compact_intent"])
+    spark.read.option("basePath", p["cells"]).parquet(p["cells"]).drop(
+        "txn"
+    ).repartition("ivf_cell").write.mode("overwrite").partitionBy(
+        "ivf_cell"
+    ).parquet(p["compact_staging"])
+    txn.write_keys(spark, p["compact_intent"], txns, key="txn")
     _compact_promote_ivf(spark, state_path)
     return {
         "folded_txns": len(txns),
         "files_before": files_before,
-        "files_after": _count_files(p["cells"]),
+        "files_after": txn.count_parquet_files(spark, p["cells"]),
     }
 
 
@@ -265,16 +222,13 @@ def merge_ivf_increment(
     recover_pending_ivf_compaction(spark, state_path)
     p = _paths(state_path)
 
-    manifest = _read_parquet_or_none(spark, p["manifest"])
-    if manifest is not None:
-        seen = {r.path for r in manifest.collect()}
-        dup = sorted(f for f in files if f in seen)
-        if dup:
-            raise ValueError(
-                f"{len(dup)} input file(s) already in the IVF manifest "
-                f"(first: {dup[0]}) — stale file list; re-list after "
-                "recover_pending_ivf"
-            )
+    dup = sorted(set(files) & txn.read_paths(spark, p["manifest"]))
+    if dup:
+        raise ValueError(
+            f"{len(dup)} input file(s) already in the IVF manifest "
+            f"(first: {dup[0]}) — stale file list; re-list after "
+            "recover_pending_ivf"
+        )
 
     stored_centroids = _read_parquet_or_none(spark, p["centroids"])
     if stored_centroids is None:
@@ -296,12 +250,10 @@ def merge_ivf_increment(
             )
         centroids = np.array([r.vec for r in rows], dtype=np.float64)
 
-    assigned = ivf_assign(emb_delta, centroids, vec_col)
-    assigned.write.mode("overwrite").parquet(p["staging"])
-    spark.createDataFrame(
-        [(f, assigned.schema.toDDL()) for f in files],
-        "path string, staged_schema string",
-    ).coalesce(1).write.mode("overwrite").parquet(p["intent"])
+    ivf_assign(emb_delta, centroids, vec_col).repartition("ivf_cell").write.mode(
+        "overwrite"
+    ).partitionBy("ivf_cell").parquet(p["staging"])
+    txn.write_keys(spark, p["intent"], files)
     _txn_promote_ivf(spark, state_path)
 
 

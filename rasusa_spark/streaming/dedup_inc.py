@@ -30,18 +30,19 @@ that introduces the later-arriving doc), so after any split of the input
 across any number of runs, the union of emitted pairs is bit-equal to
 ``minhash_lsh_pairs`` over the whole corpus (tests/test_streaming.py).
 
-Crash safety mirrors the tier merges (streaming/incremental.py, ADVICE
-r4): each increment is a roll-forward transaction — stage sigs/bands/
-pairs durably, commit an INTENT carrying the file list and a
-deterministic txn id, then promote into per-txn store directories
-(idempotent: a replayed promote overwrites the same txn dir), union the
-per-store file manifest, and clean up. ``recover_pending_dedup`` rolls a
-prepared transaction forward or clears a pre-intent crash's scratch.
+Crash safety is the tier merges' roll-forward transaction (txn.py,
+ADVICE r4): sigs and bands are staged in the store's shard layout (one
+file per shard) and pairs beside them, the file-list intent commits
+them, and a replayable promote renames each onto ``<tree>/txn=<id>``
+(the id hashes the file list) and unions the manifest.
+``recover_pending_dedup`` rolls a committed transaction forward from any
+kill point or clears a pre-intent crash's scratch; compaction is the
+same transaction over the folded txn ids.
 
 Store geometry (n_perm, n_bands, shingle_n, seed, threshold, one_perm,
-n_shards) is pinned in a config row on first merge; a later merge with
-different geometry raises instead of silently mixing incomparable
-signatures (same contract as the CMS sketch geometry carry).
+n_shards) is pinned in a driver-written config row on first merge; a
+later merge with different geometry raises instead of silently mixing
+incomparable signatures (same contract as the CMS sketch geometry carry).
 
 Reference parity note: the reference engine has no incremental dedup —
 this is part of the training-data-pipeline surface the build adds; the
@@ -52,9 +53,9 @@ produced and reprocessing is refused, not repeated).
 
 from __future__ import annotations
 
-import hashlib
 import os
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -65,11 +66,7 @@ from rasusa_spark.operators.dedup import (
     signature_agreement,
     signature_bands,
 )
-from rasusa_spark.streaming.incremental import (
-    _fs,
-    _fs_delete,
-    _read_parquet_or_none,
-)
+from rasusa_spark.streaming import txn
 
 _STORE = "minhash_store"
 
@@ -81,15 +78,18 @@ PAIRS_SCHEMA = T.StructType(
     ]
 )
 
-_CONFIG_FIELDS = (
-    "n_perm",
-    "n_bands",
-    "shingle_n",
-    "seed",
-    "threshold",
-    "one_perm",
-    "n_shards",
-    "pairs_schema",  # pins the id type too — a type change is a mismatch
+_CONFIG_SCHEMA = pa.schema(
+    [
+        ("n_perm", pa.int32()),
+        ("n_bands", pa.int32()),
+        ("shingle_n", pa.int32()),
+        ("seed", pa.int32()),
+        ("threshold", pa.float64()),
+        ("one_perm", pa.bool_()),
+        ("n_shards", pa.int32()),
+        # pins the id type too — a type change is a mismatch
+        ("pairs_schema", pa.string()),
+    ]
 )
 
 
@@ -123,63 +123,36 @@ def _sig_shard_expr(id_col_expr, n_shards: int):
     return F.pmod(F.hash(id_col_expr), F.lit(n_shards)).cast("int")
 
 
-def _txn_id(files: list[str]) -> str:
-    """Deterministic transaction id from the input file list — recovery
-    recomputes it from the intent record, so a replayed promote lands in
-    the SAME per-txn store directory (idempotent overwrite)."""
-    return hashlib.md5("\n".join(sorted(files)).encode()).hexdigest()[:12]
+def _read_tree(spark: SparkSession, tree: str, schema) -> DataFrame | None:
+    """A ``<tree>/txn=*/<shard>=*`` store tree read with the schema of the
+    delta it was staged from (no schema-inference job), or None before
+    its first transaction."""
+    if not txn.exists(spark, tree):
+        return None
+    return spark.read.schema(schema).parquet(tree)
 
 
 def _txn_cleanup_dedup(spark: SparkSession, state_path: str) -> None:
     p = _paths(state_path)
-    _fs_delete(spark, p["intent"])
-    _fs_delete(spark, p["staging_sigs"])
-    _fs_delete(spark, p["staging_bands"])
-    _fs_delete(spark, p["staging_pairs"])
+    txn.delete(
+        spark, p["intent"], p["staging_sigs"], p["staging_bands"], p["staging_pairs"]
+    )
 
 
 def _txn_promote_dedup(spark: SparkSession, state_path: str) -> None:
     """Apply a PREPARED dedup transaction. Idempotent end to end: each
-    staged dataset overwrites its own ``txn=<id>`` subdirectory (static
-    target per txn), the manifest update is a set union, and cleanup
-    deletes the intent last-but-first (deleting the intent is the commit
-    point — recovery replays only while it exists)."""
+    staged dataset moves onto its own ``txn=<id>`` subdirectory (a replay
+    skips the moves already done), the manifest update is a set union,
+    and cleanup deletes the intent first (the commit point — recovery
+    replays only while it exists)."""
     p = _paths(state_path)
-    intent_rows = spark.read.parquet(p["intent"]).collect()
-    files = sorted(r.path for r in intent_rows)
-    txn = _txn_id(files)
-    # staged datasets can legitimately be EMPTY (an increment with zero
-    # new pairs writes no parquet part files) — the intent carries each
-    # staging dir's schema so the replayed read never depends on files
-    schemas = {
-        k: T.StructType.fromDDL(getattr(intent_rows[0], k))
-        for k in ("sigs_schema", "bands_schema", "pairs_schema")
-    }
-
-    sigs = spark.read.schema(schemas["sigs_schema"]).parquet(p["staging_sigs"])
-    # sig_shard is a data column in staging; promoting it to a partition
-    # directory gives the verification join real partition pruning
-    # (VERDICT r5 Next #3: the per-increment sigs scan was O(corpus))
-    sigs.write.mode("overwrite").partitionBy("sig_shard").parquet(
-        os.path.join(p["sigs"], f"txn={txn}")
+    files = txn.intent_keys(
+        spark, p["intent"], p["staging_sigs"], p["staging_bands"], p["staging_pairs"]
     )
-    bands = spark.read.schema(schemas["bands_schema"]).parquet(
-        p["staging_bands"]
-    )  # shard is a data column here
-    bands.write.mode("overwrite").partitionBy("shard").parquet(
-        os.path.join(p["bands"], f"txn={txn}")
-    )
-    pairs = spark.read.schema(schemas["pairs_schema"]).parquet(p["staging_pairs"])
-    pairs.write.mode("overwrite").parquet(os.path.join(p["pairs"], f"txn={txn}"))
-
-    all_files = set(files)
-    manifest = _read_parquet_or_none(spark, p["manifest"])
-    if manifest is not None:
-        all_files |= {r.path for r in manifest.collect()}
-    spark.createDataFrame(
-        sorted((f,) for f in all_files), "path string"
-    ).coalesce(1).write.mode("overwrite").parquet(p["manifest"])
-
+    target = f"txn={txn.txn_id(files)}"
+    for k in ("sigs", "bands", "pairs"):
+        txn.move(spark, p[f"staging_{k}"], os.path.join(p[k], target))
+    txn.union_manifest(spark, p["manifest"], files)
     _txn_cleanup_dedup(spark, state_path)
 
 
@@ -191,45 +164,43 @@ def recover_pending_dedup(spark: SparkSession, state_path: str) -> bool:
     Callers must run this before reading the manifest (the flow wrapper
     and ``merge_minhash_increment`` itself both do)."""
     p = _paths(state_path)
-    fs, intent_jpath = _fs(spark, p["intent"])
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    if not fs.exists(intent_jpath) or not fs.exists(
-        jvm_path(os.path.join(p["intent"], "_SUCCESS"))
-    ):
-        _txn_cleanup_dedup(spark, state_path)
-        return False
-    _txn_promote_dedup(spark, state_path)
-    return True
+    return txn.recover(
+        spark, p["intent"], _txn_promote_dedup, _txn_cleanup_dedup, state_path
+    )
+
+
+def _compact_cleanup_dedup(spark: SparkSession, state_path: str) -> None:
+    p = _paths(state_path)
+    txn.delete(
+        spark,
+        p["compact_intent"],
+        p["compact_staging_bands"],
+        p["compact_staging_sigs"],
+    )
 
 
 def _compact_promote_dedup(spark: SparkSession, state_path: str) -> None:
-    """Replayable compaction promote (bands + sigs together): write each
-    consolidated txn directory (static targets ⇒ idempotent), delete the
+    """Replayable compaction promote (bands + sigs together): move each
+    consolidated dataset onto its ``txn=c-<id>`` directory, delete the
     folded txn dirs, then the intent (commit point) and scratch."""
     p = _paths(state_path)
-    intent_rows = spark.read.parquet(p["compact_intent"]).collect()
-    folded = sorted(r.txn for r in intent_rows)
-    cid = "c-" + _txn_id(folded)
-    first = intent_rows[0]
-
-    bands = spark.read.schema(T.StructType.fromDDL(first.bands_schema)).parquet(
-        p["compact_staging_bands"]
+    folded = txn.intent_keys(
+        spark,
+        p["compact_intent"],
+        p["compact_staging_bands"],
+        p["compact_staging_sigs"],
+        key="txn",
     )
-    bands.write.mode("overwrite").partitionBy("shard").parquet(
-        os.path.join(p["bands"], f"txn={cid}")
-    )
-    sigs = spark.read.schema(T.StructType.fromDDL(first.sigs_schema)).parquet(
-        p["compact_staging_sigs"]
-    )
-    sigs.write.mode("overwrite").partitionBy("sig_shard").parquet(
-        os.path.join(p["sigs"], f"txn={cid}")
-    )
+    target = f"txn=c-{txn.txn_id(folded)}"
+    txn.move(spark, p["compact_staging_bands"], os.path.join(p["bands"], target))
+    txn.move(spark, p["compact_staging_sigs"], os.path.join(p["sigs"], target))
     for t in folded:
-        _fs_delete(spark, os.path.join(p["bands"], f"txn={t}"))
-        _fs_delete(spark, os.path.join(p["sigs"], f"txn={t}"))
-    _fs_delete(spark, p["compact_intent"])
-    _fs_delete(spark, p["compact_staging_bands"])
-    _fs_delete(spark, p["compact_staging_sigs"])
+        txn.delete(
+            spark,
+            os.path.join(p["bands"], f"txn={t}"),
+            os.path.join(p["sigs"], f"txn={t}"),
+        )
+    _compact_cleanup_dedup(spark, state_path)
 
 
 def recover_pending_dedup_compaction(
@@ -239,17 +210,10 @@ def recover_pending_dedup_compaction(
     scratch. Run before any merge/compact — a half-promoted compaction
     leaves duplicate band/sig rows until replayed."""
     p = _paths(state_path)
-    fs, intent_jpath = _fs(spark, p["compact_intent"])
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    if not fs.exists(intent_jpath) or not fs.exists(
-        jvm_path(os.path.join(p["compact_intent"], "_SUCCESS"))
-    ):
-        _fs_delete(spark, p["compact_intent"])
-        _fs_delete(spark, p["compact_staging_bands"])
-        _fs_delete(spark, p["compact_staging_sigs"])
-        return False
-    _compact_promote_dedup(spark, state_path)
-    return True
+    return txn.recover(
+        spark, p["compact_intent"], _compact_promote_dedup,
+        _compact_cleanup_dedup, state_path,
+    )
 
 
 def compact_minhash_store(spark: SparkSession, state_path: str) -> dict:
@@ -261,25 +225,15 @@ def compact_minhash_store(spark: SparkSession, state_path: str) -> dict:
     identity (identical candidate/verification inputs, hence identical
     pairs) is pinned by test; the pairs tree is append-only output and is
     NOT compacted here (no pruned reads depend on its layout). Crash
-    safety: stage both datasets → one intent (_SUCCESS = prepare commit)
-    → replayable promote; only fully-committed ingest txns are folded.
-    The ingest manifest is untouched."""
+    safety: stage both datasets in the store layout → one intent
+    (_SUCCESS = prepare commit) → replayable rename promote; only
+    fully-committed ingest txns are folded. The ingest manifest is
+    untouched."""
     from rasusa_spark.streaming.ann_inc import _list_txn_dirs
 
     recover_pending_dedup(spark, state_path)
     recover_pending_dedup_compaction(spark, state_path)
     p = _paths(state_path)
-
-    def _count_files(tree: str) -> int:
-        fs, root = _fs(spark, tree)
-        if not fs.exists(root):
-            return 0
-        it = fs.listFiles(root, True)
-        n = 0
-        while it.hasNext():
-            if it.next().getPath().getName().endswith(".parquet"):
-                n += 1
-        return n
 
     txns = _list_txn_dirs(spark, p["bands"])
     if set(txns) != set(_list_txn_dirs(spark, p["sigs"])):
@@ -287,50 +241,36 @@ def compact_minhash_store(spark: SparkSession, state_path: str) -> dict:
             "bands/sigs txn sets differ — the store is mid-recovery; run "
             "recover_pending_dedup first"
         )
-    before = _count_files(p["bands"]) + _count_files(p["sigs"])
+    before = txn.count_parquet_files(spark, p["bands"], p["sigs"])
     if len(txns) <= 1:
         return {"folded_txns": 0, "files_before": before, "files_after": before}
 
-    bands = (
-        spark.read.option("basePath", p["bands"])
-        .parquet(p["bands"])
-        .drop("txn")
-        .repartition("shard")
-    )
-    bands.write.mode("overwrite").parquet(p["compact_staging_bands"])
-    sigs = (
-        spark.read.option("basePath", p["sigs"])
-        .parquet(p["sigs"])
-        .drop("txn")
-        .repartition("sig_shard")
-    )
-    sigs.write.mode("overwrite").parquet(p["compact_staging_sigs"])
-    spark.createDataFrame(
-        [(t, bands.schema.toDDL(), sigs.schema.toDDL()) for t in txns],
-        "txn string, bands_schema string, sigs_schema string",
-    ).coalesce(1).write.mode("overwrite").parquet(p["compact_intent"])
+    for tree, shard in (("bands", "shard"), ("sigs", "sig_shard")):
+        spark.read.option("basePath", p[tree]).parquet(p[tree]).drop(
+            "txn"
+        ).repartition(shard).write.mode("overwrite").partitionBy(shard).parquet(
+            p[f"compact_staging_{tree}"]
+        )
+    txn.write_keys(spark, p["compact_intent"], txns, key="txn")
     _compact_promote_dedup(spark, state_path)
     return {
         "folded_txns": len(txns),
         "files_before": before,
-        "files_after": _count_files(p["bands"]) + _count_files(p["sigs"]),
+        "files_after": txn.count_parquet_files(spark, p["bands"], p["sigs"]),
     }
 
 
 def _check_config(spark: SparkSession, state_path: str, cfg: dict) -> None:
     p = _paths(state_path)
-    stored = _read_parquet_or_none(spark, p["config"])
+    stored = txn.read_table(spark, p["config"])
     if stored is None:
-        spark.createDataFrame(
-            [tuple(cfg[k] for k in _CONFIG_FIELDS)],
-            "n_perm int, n_bands int, shingle_n int, seed int, "
-            "threshold double, one_perm boolean, n_shards int, "
-            "pairs_schema string",
-        ).coalesce(1).write.mode("overwrite").parquet(p["config"])
+        txn.write_table(
+            spark, p["config"], pa.Table.from_pylist([cfg], schema=_CONFIG_SCHEMA)
+        )
         return
-    row = stored.collect()[0].asDict()
+    row = stored.to_pylist()[0]
     mismatch = {
-        k: (row[k], cfg[k]) for k in _CONFIG_FIELDS if row[k] != cfg[k]
+        k: (row[k], cfg[k]) for k in _CONFIG_SCHEMA.names if row[k] != cfg[k]
     }
     if mismatch:
         raise ValueError(
@@ -346,12 +286,11 @@ def minhash_pairs_store(spark: SparkSession, state_path: str) -> DataFrame:
     increment emitted zero pairs (only _SUCCESS markers on disk) still
     reads back as an empty, correctly-typed table."""
     p = _paths(state_path)
-    cfg = _read_parquet_or_none(spark, p["config"])
+    cfg = txn.read_table(spark, p["config"])
     if cfg is None:
         return spark.createDataFrame([], PAIRS_SCHEMA)
-    schema = T.StructType.fromDDL(cfg.collect()[0].pairs_schema)
-    fs, root = _fs(spark, p["pairs"])
-    if not fs.exists(root):
+    schema = T.StructType.fromDDL(cfg.column("pairs_schema")[0].as_py())
+    if not txn.exists(spark, p["pairs"]):
         return spark.createDataFrame([], schema)
     return (
         spark.read.schema(schema)
@@ -409,16 +348,13 @@ def merge_minhash_increment(
         },
     )
 
-    manifest = _read_parquet_or_none(spark, p["manifest"])
-    if manifest is not None:
-        seen = {r.path for r in manifest.collect()}
-        dup = sorted(f for f in files if f in seen)
-        if dup:
-            raise ValueError(
-                f"{len(dup)} input file(s) already in the minhash manifest "
-                f"(first: {dup[0]}) — stale file list; re-list after "
-                "recover_pending_dedup"
-            )
+    dup = sorted(set(files) & txn.read_paths(spark, p["manifest"]))
+    if dup:
+        raise ValueError(
+            f"{len(dup)} input file(s) already in the minhash manifest "
+            f"(first: {dup[0]}) — stale file list; re-list after "
+            "recover_pending_dedup"
+        )
 
     build = minhash_signatures_oph if one_perm else minhash_signatures
     sigs_delta = build(
@@ -428,6 +364,9 @@ def merge_minhash_increment(
         "shard", F.pmod(F.col("bucket"), F.lit(n_shards)).cast("int")
     )
     bands_delta = bands_delta.persist()
+    sigs_out = sigs_delta.select(id_col, "signature").withColumn(
+        "sig_shard", _sig_shard_expr(F.col(id_col), n_shards)
+    )
 
     # candidates involving >=1 new doc: new x new (canonical order inside
     # the delta) + new x stored (canonical order via least/greatest — the
@@ -441,7 +380,7 @@ def merge_minhash_increment(
             F.col(f"y.{id_col}").alias("id_b"),
         )
     )
-    stored_bands = _read_parquet_or_none(spark, p["bands"])
+    stored_bands = _read_tree(spark, p["bands"], bands_delta.schema)
     if stored_bands is not None:
         # bounded driver list (<= n_shards entries): real partition
         # pruning on the store read — only shards the delta probes
@@ -470,7 +409,7 @@ def merge_minhash_increment(
     # candidate→signature joins read O(delta-touched shards), not the
     # whole corpus; ids are globally unique, so each signature exists in
     # exactly one txn)
-    stored_sigs = _read_parquet_or_none(spark, p["sigs"])
+    stored_sigs = _read_tree(spark, p["sigs"], sigs_out.schema)
     sig_lookup = sigs_delta.select(id_col, "signature")
     if stored_sigs is not None:
         # bounded driver list (<= n_shards entries)
@@ -513,24 +452,17 @@ def merge_minhash_increment(
         .select("id_a", "id_b", "est_jaccard")
     )
 
-    # prepare (durable staging), intent LAST, then replayable promote —
-    # identical crash-safety posture to the tier merges
-    sigs_out = sigs_delta.select(id_col, "signature").withColumn(
-        "sig_shard", _sig_shard_expr(F.col(id_col), n_shards)
-    )
-    sigs_out.write.mode("overwrite").parquet(p["staging_sigs"])
-    bands_delta.write.mode("overwrite").parquet(p["staging_bands"])
+    # prepare (durable staging in the store layout, one file per shard),
+    # intent LAST, then the replayable rename promote — identical
+    # crash-safety posture to the tier merges
+    sigs_out.repartition("sig_shard").write.mode("overwrite").partitionBy(
+        "sig_shard"
+    ).parquet(p["staging_sigs"])
+    bands_delta.repartition("shard").write.mode("overwrite").partitionBy(
+        "shard"
+    ).parquet(p["staging_bands"])
     pairs_delta.write.mode("overwrite").parquet(p["staging_pairs"])
-    ddl = (
-        sigs_out.schema.toDDL(),
-        bands_delta.schema.toDDL(),
-        pairs_delta.schema.toDDL(),
-    )
-    spark.createDataFrame(
-        [(f, *ddl) for f in files],
-        "path string, sigs_schema string, bands_schema string, "
-        "pairs_schema string",
-    ).coalesce(1).write.mode("overwrite").parquet(p["intent"])
+    txn.write_keys(spark, p["intent"], files)
     sigs_delta.unpersist()
     bands_delta.unpersist()
     cand.unpersist()

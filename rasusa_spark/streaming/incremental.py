@@ -12,12 +12,19 @@ Two complementary paths:
   ``allow_late`` (they merge exactly, since merge is associative).
 
   The store is hive-partitioned by bucket day; a merge reads and rewrites
-  ONLY the partitions its increment touches (dynamic partition overwrite —
-  the same pattern plans/checkpoint.py uses), so the I/O is O(delta), not
+  ONLY the partitions its increment touches, so the I/O is O(delta), not
   O(store). Round 1 rewrote the whole tier per increment (VERDICT r1 weak
   #5) through a non-atomic tmp-copy cycle (ADVICE r1); both are gone — the
   per-group watermark lives in a compact side table instead of being
   re-derived from a full store scan.
+
+  With an input file list each merge is a crash-safe roll-forward
+  transaction (txn.py): the touched partitions (one file each) and the
+  advanced watermark are staged, the file-list intent commits them, and
+  a replayable promote renames them into place and unions the manifest;
+  ``recover_pending`` clears a pre-intent crash's scratch or rolls a
+  committed transaction forward, and refuses one staged by the older
+  layout, naming its staging directory.
 
 - ``streaming_rollup`` — true Structured Streaming: file-source readStream →
   event-time window aggregate with a watermark → parquet/memory sink.
@@ -27,16 +34,15 @@ Two complementary paths:
 
 from __future__ import annotations
 
-import contextlib
 import os
 import re
 
 from pyspark.errors import AnalysisException
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
 
 from ..operators.rollup import TIERS, rollup
+from . import txn
 
 _AGGS = ["n_tok_sum", "row_count", "n_tok_min", "n_tok_max"]
 _PART = "bucket_part"  # hive partition column: day of bucket_start
@@ -60,24 +66,6 @@ def interval_seconds(width: str) -> int:
     return int(m.group(1)) * _INTERVAL_UNIT_S[m.group(2)]
 
 
-@contextlib.contextmanager
-def _dynamic_overwrite(spark: SparkSession):
-    """Scope spark.sql.sources.partitionOverwriteMode=dynamic to one write:
-    the previous value is restored on exit so unrelated later
-    mode('overwrite').partitionBy(...) writes in the same session don't
-    silently become dynamic (ADVICE r5)."""
-    key = "spark.sql.sources.partitionOverwriteMode"
-    prev = spark.conf.get(key, None)
-    spark.conf.set(key, "dynamic")
-    try:
-        yield
-    finally:
-        if prev is None:
-            spark.conf.unset(key)
-        else:
-            spark.conf.set(key, prev)
-
-
 def _read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
     """Read a parquet dir, returning None when the path does not exist OR
     holds no parquet footers (a legitimately-empty increment can promote a
@@ -94,41 +82,24 @@ def _read_parquet_or_none(spark: SparkSession, path: str) -> DataFrame | None:
         raise
 
 
-def _fs(spark: SparkSession, path: str):
-    """Hadoop FileSystem + qualified Path (local/HDFS/S3A alike)."""
-    jpath = spark._jvm.org.apache.hadoop.fs.Path(path)  # noqa: SLF001
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())  # noqa: SLF001
-    return fs, jpath
-
-
-def _fs_delete(spark: SparkSession, path: str) -> None:
-    fs, jpath = _fs(spark, path)
-    if fs.exists(jpath):
-        fs.delete(jpath, True)
-
-
 def _read_store_or_empty(spark: SparkSession, store: str, schema) -> DataFrame:
     """Read the tier store, dropping the hive partition column; an absent
-    OR file-less store (a legitimately empty increment created the
-    directory but no part files) reads as an empty, correctly-typed
-    table instead of throwing schema inference errors."""
-    try:
-        return spark.read.parquet(store).drop(_PART)
-    except AnalysisException as e:
-        msg = str(e)
-        if "PATH_NOT_FOUND" in msg or "UNABLE_TO_INFER_SCHEMA" in msg:
-            return spark.createDataFrame([], schema)
-        raise
+    or file-less store reads as an empty, correctly-typed table."""
+    df = _read_parquet_or_none(spark, store)
+    return df.drop(_PART) if df is not None else spark.createDataFrame([], schema)
 
 
 def _txn_paths(state_path: str, store_name: str) -> dict[str, str]:
-    """On-disk layout of one store's merge transaction: ``manifest`` is the
-    durable list of input files already folded into the store; ``staging``
-    holds the full new content of every touched partition; ``txnwm`` the
-    advanced watermark rows; ``intent`` the file list being applied — its
-    existence (with _SUCCESS) is the signal that a prepared transaction
-    must be rolled FORWARD."""
+    """On-disk layout of one store and its merge transaction: ``manifest``
+    is the durable list of input files already folded into the store;
+    ``staging`` holds the full new content of every touched partition, in
+    the store's own ``bucket_part=<day>`` layout; ``txnwm`` the advanced
+    watermark; ``intent`` the file list being applied — its existence
+    (with _SUCCESS) is the signal that a prepared transaction must be
+    rolled FORWARD."""
     return {
+        "store": os.path.join(state_path, store_name),
+        "wm": os.path.join(state_path, f"{store_name}_wm"),
         "manifest": os.path.join(state_path, f"{store_name}_files"),
         "staging": os.path.join(state_path, f"{store_name}_txn_staging"),
         "txnwm": os.path.join(state_path, f"{store_name}_txn_wm"),
@@ -137,58 +108,31 @@ def _txn_paths(state_path: str, store_name: str) -> dict[str, str]:
 
 
 def _txn_cleanup(spark: SparkSession, state_path: str, store_name: str) -> None:
-    """Commit a promoted transaction: deleting the INTENT first is the
-    commit point (recovery replays only while the intent exists); the
+    """End a promoted transaction: deleting the INTENT first is the commit
+    point (recovery replays only while the intent exists); the
     staging/wm scratch goes after."""
     p = _txn_paths(state_path, store_name)
-    _fs_delete(spark, p["intent"])
-    _fs_delete(spark, p["txnwm"])
-    _fs_delete(spark, p["staging"])
+    txn.delete(spark, p["intent"], p["txnwm"], p["staging"])
+
+
+def _apply_staged(spark: SparkSession, p: dict[str, str]) -> None:
+    """Move each staged partition onto the store, then the staged
+    watermark onto the live one (delete-then-rename, no data re-read)."""
+    txn.move_partitions(spark, p["staging"], p["store"])
+    txn.move(spark, p["txnwm"], p["wm"])
 
 
 def _txn_promote(spark: SparkSession, state_path: str, store_name: str) -> None:
-    """Apply a PREPARED transaction: overwrite the touched store partitions
-    from staging, advance the watermark, union the intent's file list into
-    the manifest, then clean up. Every step is idempotent (staging holds
-    the complete new content of each touched partition; manifest union is
-    set union; watermark overwrite is absolute), so a kill anywhere here is
-    repaired by re-running this function — which ``recover_pending`` does
-    on the next merge."""
+    """Apply a PREPARED transaction: move the touched partitions and the
+    advanced watermark into place, union the intent's file list into the
+    manifest, then clean up. Every step is idempotent (a moved directory
+    is gone from staging, the manifest union is a set union), so a kill
+    anywhere here is repaired by re-running this function — which
+    ``recover_pending`` does on the next merge."""
     p = _txn_paths(state_path, store_name)
-    store = os.path.join(state_path, store_name)
-    wm_path = os.path.join(state_path, f"{store_name}_wm")
-
-    # The intent pins each staged dataset's schema (ADVICE r5): an EMPTY
-    # increment can stage zero parquet part files, and an inferred-schema
-    # read of that directory throws on every recovery replay — wedging the
-    # store until the intent is hand-deleted. Pre-pinning intents (no DDL
-    # columns) fall back to inference, preserving recovery of transactions
-    # prepared by older code.
-    intent_df = spark.read.parquet(p["intent"])
-    first = intent_df.limit(1).collect()[0]
-    cols = set(intent_df.columns)
-
-    def _reader(ddl_col: str):
-        if ddl_col in cols and getattr(first, ddl_col) is not None:
-            return spark.read.schema(T.StructType.fromDDL(getattr(first, ddl_col)))
-        return spark.read
-
-    staging = _reader("staging_ddl").parquet(p["staging"])  # _PART is data here
-    with _dynamic_overwrite(spark):
-        staging.write.mode("overwrite").partitionBy(_PART).parquet(store)
-
-    _reader("txnwm_ddl").parquet(p["txnwm"]).coalesce(1).write.mode(
-        "overwrite"
-    ).parquet(wm_path)
-
-    files = {r.path for r in intent_df.select("path").collect()}
-    manifest = _read_parquet_or_none(spark, p["manifest"])
-    if manifest is not None:
-        files |= {r.path for r in manifest.collect()}
-    spark.createDataFrame(
-        sorted((f,) for f in files), "path string"
-    ).coalesce(1).write.mode("overwrite").parquet(p["manifest"])
-
+    files = txn.intent_keys(spark, p["intent"], p["staging"])
+    _apply_staged(spark, p)
+    txn.union_manifest(spark, p["manifest"], files)
     _txn_cleanup(spark, state_path, store_name)
 
 
@@ -210,15 +154,9 @@ def recover_pending(spark: SparkSession, state_path: str, store_name: str) -> bo
     not-yet-merged file set (a pending transaction's files land in the
     manifest only during replay)."""
     p = _txn_paths(state_path, store_name)
-    fs, intent_jpath = _fs(spark, p["intent"])
-    jvm_path = spark._jvm.org.apache.hadoop.fs.Path  # noqa: SLF001
-    if not fs.exists(intent_jpath) or not fs.exists(
-        jvm_path(os.path.join(p["intent"], "_SUCCESS"))
-    ):
-        _txn_cleanup(spark, state_path, store_name)
-        return False
-    _txn_promote(spark, state_path, store_name)
-    return True
+    return txn.recover(
+        spark, p["intent"], _txn_promote, _txn_cleanup, state_path, store_name
+    )
 
 
 def _merge_increment(
@@ -233,18 +171,20 @@ def _merge_increment(
 ) -> DataFrame:
     """Shared O(delta) merge machinery: watermark guard, partition-pruned
     read of only the touched bucket days, ``remerge(union)`` to re-aggregate
-    (must be exactly associative), dynamic partition overwrite, compact
-    per-group watermark advance. ``inc`` must be the increment already
+    (must be exactly associative), rewrite of the touched partitions and
+    the compact per-group watermark, both staged in the store's layout
+    and renamed into place. ``inc`` must be the increment already
     aggregated to (group_cols, bucket_start) granularity.
 
     With ``txn_files`` (the input file paths ``inc`` was built from) the
-    merge is a crash-safe roll-forward TRANSACTION: the merged content of
-    every touched partition is staged durably first, then an intent record
-    commits the prepare phase, then a replayable promote applies store +
-    watermark + per-store file manifest together. A kill at any point
-    either leaves the store/manifest pair untouched (pre-intent) or is
-    rolled forward exactly once by ``recover_pending`` — never a partial
-    state that re-merges the same file into a non-idempotent carrier."""
+    merge is a crash-safe roll-forward TRANSACTION (txn.py): an intent
+    record commits the staged data, then a replayable promote applies
+    store + watermark + per-store file manifest together. A kill at any
+    point either leaves the store/manifest pair untouched (pre-intent) or
+    is rolled forward exactly once by ``recover_pending`` — never a
+    partial state that re-merges the same file into a non-idempotent
+    carrier."""
+    p = _txn_paths(state_path, store_name)
     if txn_files is not None:
         if not txn_files:
             raise ValueError(
@@ -257,9 +197,13 @@ def _merge_increment(
         # merge_*_increment previously clobbered a pending intent)
         recover_pending(spark, state_path, store_name)
     inc = inc.persist()
-    store = os.path.join(state_path, store_name)
-    wm_path = os.path.join(state_path, f"{store_name}_wm")
-    wm = _read_parquet_or_none(spark, wm_path)
+    # the watermark read with its known schema: no schema-inference job
+    wm_schema = inc.select(*group_cols, F.col("bucket_start").alias("_wm")).schema
+    wm = (
+        spark.read.schema(wm_schema).parquet(p["wm"])
+        if txn.exists(spark, p["wm"])
+        else None
+    )
 
     if wm is not None and not allow_late:
         late = inc.join(wm, on=group_cols, how="inner").where(
@@ -274,21 +218,17 @@ def _merge_increment(
             )
 
     if txn_files is not None:
-        p = _txn_paths(state_path, store_name)
-        manifest = _read_parquet_or_none(spark, p["manifest"])
-        if manifest is not None:
-            seen = {r.path for r in manifest.collect()}
-            dup = sorted(f for f in txn_files if f in seen)
-            if dup:
-                inc.unpersist()
-                raise ValueError(
-                    f"{len(dup)} input file(s) already in {store_name}'s "
-                    f"merged manifest (first: {dup[0]}) — stale file list; "
-                    "run recover_pending and re-list before merging"
-                )
+        dup = sorted(set(txn_files) & txn.read_paths(spark, p["manifest"]))
+        if dup:
+            inc.unpersist()
+            raise ValueError(
+                f"{len(dup)} input file(s) already in {store_name}'s "
+                f"merged manifest (first: {dup[0]}) — stale file list; "
+                "run recover_pending and re-list before merging"
+            )
 
-    part_expr = F.date_format("bucket_start", "yyyyMMdd").alias(_PART)
-    existing = _read_parquet_or_none(spark, store)
+    part_expr = F.date_format("bucket_start", "yyyyMMdd")
+    existing = _read_parquet_or_none(spark, p["store"])
     if existing is not None:
         # partition-pruned read of ONLY the touched days (bounded driver
         # list: one entry per distinct increment day)
@@ -296,12 +236,6 @@ def _merge_increment(
         merged = remerge(
             existing.where(F.col(_PART).isin(touched)).drop(_PART).unionByName(inc)
         )
-        if txn_files is None:
-            # the write below overwrites partitions the plan also reads —
-            # cut the lineage first (bounded: only touched partitions);
-            # the txn path materializes to staging instead, which both
-            # cuts the lineage and makes the promote replayable
-            merged = merged.localCheckpoint(eager=True)
     else:
         merged = inc
 
@@ -316,40 +250,22 @@ def _merge_increment(
     else:
         new_wm = inc_wm
 
-    if txn_files is not None:
-        # prepare: stage merged partitions (durable, outside the store —
-        # _PART stays a DATA column so read-back types survive), then the
-        # advanced watermark, then the intent marker LAST (its _SUCCESS
-        # commits the prepare phase)
-        staged = merged.withColumn(_PART, F.date_format("bucket_start", "yyyyMMdd"))
-        staged.write.mode("overwrite").parquet(p["staging"])
-        new_wm_rows = new_wm.collect()  # bounded: one row per group
-        spark.createDataFrame(new_wm_rows, new_wm.schema).coalesce(1).write.mode(
-            "overwrite"
-        ).parquet(p["txnwm"])
-        # schema DDLs ride in the intent so the replayed promote never
-        # depends on part files existing in staging (empty increments)
-        staging_ddl = staged.schema.toDDL()
-        txnwm_ddl = new_wm.schema.toDDL()
-        spark.createDataFrame(
-            [(f, staging_ddl, txnwm_ddl) for f in txn_files],
-            "path string, staging_ddl string, txnwm_ddl string",
-        ).coalesce(1).write.mode("overwrite").parquet(p["intent"])
-        inc.unpersist()
-        _txn_promote(spark, state_path, store_name)
-        return _read_store_or_empty(spark, store, inc.schema)
-
-    with _dynamic_overwrite(spark):
-        merged.withColumn(
-            _PART, F.date_format("bucket_start", "yyyyMMdd")
-        ).write.mode("overwrite").partitionBy(_PART).parquet(store)
-
-    new_wm_rows = new_wm.collect()  # bounded: one row per group
-    inc.unpersist()
-    spark.createDataFrame(new_wm_rows, new_wm.schema).coalesce(1).write.mode(
+    # stage (durable, outside the store; materializing here also cuts the
+    # lineage from the partitions the promote replaces): one file per
+    # touched partition, then the advanced watermark
+    merged.withColumn(_PART, part_expr).repartition(_PART).write.mode(
         "overwrite"
-    ).parquet(wm_path)
-    return _read_store_or_empty(spark, store, inc.schema)
+    ).partitionBy(_PART).parquet(p["staging"])
+    new_wm.coalesce(1).write.mode("overwrite").parquet(p["txnwm"])
+    inc.unpersist()
+    if txn_files is None:
+        _apply_staged(spark, p)
+        txn.delete(spark, p["staging"])
+    else:
+        # the intent LAST: its _SUCCESS commits the prepare phase
+        txn.write_keys(spark, p["intent"], txn_files)
+        _txn_promote(spark, state_path, store_name)
+    return _read_store_or_empty(spark, p["store"], inc.schema)
 
 
 def merge_rollup_increment(

@@ -116,8 +116,8 @@ def run_flow(
 ) -> dict:
     """One drain-and-merge round; safe to call repeatedly (both stages are
     resumable, see module docstring). Returns counters for observability."""
+    from rasusa_spark.streaming import txn
     from rasusa_spark.streaming.incremental import (
-        _read_parquet_or_none,
         merge_cms_increment,
         merge_deriv_increment,
         merge_distinct_increment,
@@ -161,17 +161,13 @@ def run_flow(
     def merge_store(store_name: str, merge_fn):
         recover_pending(spark, state, store_name)
         manifest_path = os.path.join(state, f"{store_name}_files")
-        manifest = _read_parquet_or_none(spark, manifest_path)
-        if manifest is None:
+        seen = txn.read_paths(spark, manifest_path)
+        if not seen:
             # one-time migration: seed from the pre-r5 global manifest so
             # existing work dirs don't re-merge their whole history
-            legacy = _read_parquet_or_none(spark, legacy_manifest)
-            if legacy is not None:
-                legacy.coalesce(1).write.mode("overwrite").parquet(manifest_path)
-                manifest = spark.read.parquet(manifest_path)
-        seen = (
-            {r.path for r in manifest.collect()} if manifest is not None else set()
-        )
+            seen = txn.read_paths(spark, legacy_manifest)
+            if seen:
+                txn.write_keys(spark, manifest_path, seen)
         new = [f for f in all_files if f not in seen]
         if not new:
             return 0, None
@@ -260,13 +256,8 @@ def run_flow(
         )
 
         recover_pending_dedup(spark, state)
-        from rasusa_spark.streaming.incremental import (
-            _read_parquet_or_none as _rp,
-        )
-
         doc_files = _list_parquet_files_recursive(spark, dedup_input)
-        m = _rp(spark, os.path.join(state, "minhash_files"))
-        seen_docs = {r.path for r in m.collect()} if m is not None else set()
+        seen_docs = txn.read_paths(spark, os.path.join(state, "minhash_files"))
         new_docs = [f for f in doc_files if f not in seen_docs]
         dedup_new = len(new_docs)
         if new_docs:

@@ -125,6 +125,61 @@ def test_numpy_xxh64_string_matches_spark(spark):
         assert (np.int64(h1[i]), np.int64(h2[i])) == got[i], cases[i][:30]
 
 
+def test_npxxh_reads_bytes_little_endian():
+    """XXH64 words and Arrow offsets are little-endian whatever the host:
+    the byte reinterpretations must name the byte order, not use the
+    native one (a big-endian host would read 1 as 2**56), and the
+    vectorized short-string path must agree with the scalar reference,
+    whose reads are explicitly little-endian."""
+    import pyarrow as pa
+
+    from rasusa_spark.functions import npxxh
+
+    b = np.array([1, 0, 0, 0, 0, 0, 0, 0, 0, 1, 0, 0, 0, 0, 0, 0], np.uint8)
+    words = npxxh.le_words(b)
+    assert words.dtype.byteorder in ("<", "=") and words.dtype.str == "<u8"
+    assert [int(w) for w in words] == [1, 256]
+    offs = npxxh.arrow_offsets(pa.array(["a", "bcd"]).buffers()[1], large=False)
+    assert offs.dtype.str == "<i4" and offs.tolist() == [0, 1, 4]
+    big = pa.array(["a", "bcd"], pa.large_string()).buffers()[1]
+    assert npxxh.arrow_offsets(big, large=True).tolist() == [0, 1, 4]
+
+    datas = [bytes(range(1, L + 1)) for L in range(0, 32)]
+    offs = np.zeros(len(datas) + 1, dtype=np.int64)
+    offs[1:] = np.cumsum([len(d) for d in datas])
+    flat = np.frombuffer(b"".join(datas), dtype=np.uint8)
+    old = np.seterr(over="ignore")
+    try:
+        got = npxxh.xxh64_strings_vec(
+            flat,
+            offs,
+            np.arange(len(datas), dtype=np.int64),
+            np.full(len(datas), 42, dtype=np.uint64),
+        )
+        want = [npxxh.xxh64_bytes_py(d, 42) for d in datas]
+    finally:
+        np.seterr(**old)
+    assert [int(h) for h in got] == want
+
+
+def test_list_offsets_refuse_int32_overflow():
+    """The dedup kernels build Spark ``array`` columns with int32 Arrow
+    offsets: a batch whose lists hold exactly 2**31 - 1 values is still
+    representable, one more value is refused with the count, never
+    wrapped into negative offsets."""
+    from rasusa_spark.operators.dedup import _list_offsets
+
+    edge = 2**31 - 1
+    ok = _list_offsets(np.array([0, 5, edge], dtype=np.int64), "signatures")
+    assert ok.to_pylist() == [0, 5, edge]
+    with pytest.raises(ValueError, match=f"signatures: {edge + 1} list values"):
+        _list_offsets(np.array([0, 5, edge + 1], dtype=np.int64), "signatures")
+    # the signature kernel's offsets: m rows of n_perm values each
+    m, n_perm = (edge // 64) + 1, 64
+    with pytest.raises(ValueError, match=str(m * n_perm)):
+        _list_offsets(np.array([0, m * n_perm], dtype=np.int64), "signatures")
+
+
 def test_numpy_xxh64_matches_spark(spark):
     """The minhash signature kernel's numpy XXH64 must be bit-exact vs
     Spark's xxhash64 for both composition shapes it uses: the

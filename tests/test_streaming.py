@@ -1848,3 +1848,200 @@ def test_incremental_twa_merge_equals_batch(spark, raw4k, tmp_path):
     got = twa_finalize(merged.select(*batch.columns))
     want = time_weighted_avg(raw4k, 3600)
     assert key(got.select(*want.columns)) == key(want)
+
+
+# --- rename-based promote: legacy refusal and kills between renames --------
+
+
+def _store_snapshot(*dirs):
+    import glob
+    import os
+
+    return {
+        f: os.path.getmtime(f)
+        for d in dirs
+        for f in glob.glob(f"{d}/**", recursive=True)
+        if os.path.isfile(f)
+    }
+
+
+def test_txn_refuses_old_layout_intent(spark, raw4k, tmp_path):
+    """A transaction prepared by the older layout — the new content staged
+    as loose part files with ``bucket_part`` as data, schema DDLs in the
+    intent — cannot be promoted by rename: it would record its files in
+    the manifest and move no data. Recovery (and a merge, which recovers
+    first) refuses it with an error naming the staging directory, and
+    leaves store, watermark and manifest untouched."""
+    import os
+    import re
+
+    import rasusa_spark.streaming.dedup_inc as dd
+    import rasusa_spark.streaming.incremental as inc_mod
+    from rasusa_spark.streaming import txn
+
+    state = str(tmp_path / "state")
+    merge_rollup_increment(
+        spark, raw4k.where(F.col("row_idx") < 2000), state, tier="1h", files=["f0"]
+    )
+    p = inc_mod._txn_paths(state, "rollup_1h")
+    staged = rollup(raw4k, "1h").withColumn(
+        "bucket_part", F.date_format("bucket_start", "yyyyMMdd")
+    )
+    staged.write.parquet(p["staging"])
+    wm = spark.read.parquet(p["wm"])
+    wm.write.parquet(p["txnwm"])
+    spark.createDataFrame(
+        [("f1", staged.schema.toDDL(), wm.schema.toDDL())],
+        "path string, staging_ddl string, txnwm_ddl string",
+    ).coalesce(1).write.parquet(p["intent"])
+    before = _store_snapshot(p["store"], p["wm"], p["manifest"])
+    rows_before = _rows(spark.read.parquet(p["store"]))
+
+    with pytest.raises(ValueError, match=re.escape(p["staging"])):
+        inc_mod.recover_pending(spark, state, "rollup_1h")
+    with pytest.raises(ValueError, match="older store layout"):
+        merge_rollup_increment(
+            spark, raw4k.where(F.col("row_idx") >= 2000), state, tier="1h",
+            allow_late=True, files=["f2"],
+        )
+    assert _store_snapshot(p["store"], p["wm"], p["manifest"]) == before
+    assert _rows(spark.read.parquet(p["store"])) == rows_before
+    assert txn.read_paths(spark, p["manifest"]) == {"f0"}
+    assert os.path.exists(f"{p['intent']}/_SUCCESS")  # left for the operator
+
+    # the dedup store: an intent carrying the staged schemas
+    dstate = str(tmp_path / "dstate")
+    q = dd._paths(dstate)
+    spark.createDataFrame(
+        [(1, [1, 2], 3)], "doc_id long, signature array<long>, sig_shard int"
+    ).write.parquet(q["staging_sigs"])
+    spark.createDataFrame(
+        [("d0", "doc_id bigint", "doc_id bigint", "id_a bigint")],
+        "path string, sigs_schema string, bands_schema string, "
+        "pairs_schema string",
+    ).coalesce(1).write.parquet(q["intent"])
+    with pytest.raises(ValueError, match=re.escape(q["staging_sigs"])):
+        dd.recover_pending_dedup(spark, dstate)
+    assert not txn.exists(spark, q["root"])
+    assert not txn.exists(spark, q["manifest"])
+
+
+def test_tier_txn_kill_between_partition_renames(
+    spark, raw4k, tmp_path, monkeypatch
+):
+    """A kill inside the promote of a tier store, after the first of
+    several partition renames — the second partition's delete done, its
+    rename not — leaves a store mixing new, old and missing partitions.
+    ``recover_pending`` must converge to the single-run reference: the
+    same store, watermark and manifest."""
+    import glob
+    import os
+
+    import rasusa_spark.streaming.incremental as inc_mod
+    from rasusa_spark.streaming import txn
+
+    first = raw4k.where(F.col("row_idx") < 2000)
+    second = raw4k.where(F.col("row_idx") >= 2000)
+    ref = str(tmp_path / "ref")
+    merge_rollup_increment(spark, first, ref, tier="1h", files=["f0"])
+    merge_rollup_increment(
+        spark, second, ref, tier="1h", allow_late=True, files=["f1"]
+    )
+
+    state = str(tmp_path / "state")
+    merge_rollup_increment(spark, first, state, tier="1h", files=["f0"])
+    real_move = txn.move
+    moved = []
+
+    def dying_move(spark_, src, dst):
+        if "bucket_part=" in src and moved:
+            txn.delete(spark_, dst)
+            raise RuntimeError("injected crash between partition renames")
+        real_move(spark_, src, dst)
+        if "bucket_part=" in src:
+            moved.append(dst)
+
+    monkeypatch.setattr(txn, "move", dying_move)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        merge_rollup_increment(
+            spark, second, state, tier="1h", allow_late=True, files=["f1"]
+        )
+    monkeypatch.setattr(txn, "move", real_move)
+    p = inc_mod._txn_paths(state, "rollup_1h")
+    left = glob.glob(f"{p['staging']}/bucket_part=*")
+    assert len(moved) == 1 and len(moved) + len(left) >= 3
+    assert os.path.exists(f"{p['intent']}/_SUCCESS")
+    assert txn.read_paths(spark, p["manifest"]) == {"f0"}
+
+    assert inc_mod.recover_pending(spark, state, "rollup_1h") is True
+    assert not os.path.exists(p["intent"]) and not os.path.exists(p["staging"])
+
+    def tables(root):
+        return (
+            _rows(spark.read.parquet(f"{root}/rollup_1h")),
+            sorted(
+                tuple(r)
+                for r in spark.read.parquet(f"{root}/rollup_1h_wm").collect()
+            ),
+            txn.read_paths(spark, f"{root}/rollup_1h_files"),
+        )
+
+    assert tables(state) == tables(ref)
+    assert tables(state)[0] == _rows(rollup(raw4k, "1h"))
+
+
+def test_minhash_txn_kill_between_sigs_and_bands_renames(
+    spark, doubled_docs, tmp_path, monkeypatch
+):
+    """A kill inside the minhash promote after the signatures rename and
+    before the bands rename leaves ``sigs/txn=<id>`` without its bands.
+    ``recover_pending_dedup`` must converge: matching txn sets, the
+    manifest holding both increments, and pairs bit-equal to batch
+    ``minhash_lsh_pairs`` over the whole corpus."""
+    import glob
+    import os
+
+    import rasusa_spark.streaming.ann_inc as ann
+    import rasusa_spark.streaming.dedup_inc as dd
+    from rasusa_spark.operators.dedup import (
+        minhash_lsh_pairs,
+        release_dedup_caches,
+    )
+    from rasusa_spark.streaming import txn
+
+    state = str(tmp_path / "state")
+    inp = str(tmp_path / "docs")
+    originals = doubled_docs.where(F.col("doc_id") < 100000)
+    clones = doubled_docs.where(F.col("doc_id") >= 100000)
+    originals.coalesce(1).write.parquet(f"{inp}/a")
+    clones.coalesce(1).write.parquet(f"{inp}/b")
+    fa = sorted(glob.glob(f"{inp}/a/*.parquet"))
+    fb = sorted(glob.glob(f"{inp}/b/*.parquet"))
+    dd.merge_minhash_increment(spark, spark.read.parquet(*fa), state, files=fa)
+
+    p = dd._paths(state)
+    real_move = txn.move
+
+    def dying_move(spark_, src, dst):
+        if src == p["staging_bands"]:
+            raise RuntimeError("injected crash after the sigs rename")
+        real_move(spark_, src, dst)
+
+    monkeypatch.setattr(txn, "move", dying_move)
+    with pytest.raises(RuntimeError, match="injected crash"):
+        dd.merge_minhash_increment(spark, spark.read.parquet(*fb), state, files=fb)
+    monkeypatch.setattr(txn, "move", real_move)
+    assert len(ann._list_txn_dirs(spark, p["sigs"])) == 2
+    assert len(ann._list_txn_dirs(spark, p["bands"])) == 1
+    assert os.path.exists(f"{p['intent']}/_SUCCESS")
+
+    assert dd.recover_pending_dedup(spark, state) is True
+    assert not txn.exists(spark, p["intent"])
+    txns = ann._list_txn_dirs(spark, p["sigs"])
+    assert len(txns) == 2
+    assert txns == ann._list_txn_dirs(spark, p["bands"])
+    assert txns == ann._list_txn_dirs(spark, p["pairs"])
+    assert txn.read_paths(spark, p["manifest"]) == set(fa) | set(fb)
+    batch = minhash_lsh_pairs(doubled_docs, n_perm=64, n_bands=32, threshold=0.5)
+    assert _pairs_rows(dd.minhash_pairs_store(spark, state)) == _pairs_rows(batch)
+    release_dedup_caches()
